@@ -1804,9 +1804,8 @@ _ALIAS_INDEX: dict[tuple[str, str], str] = {}
 def _ensure_alias_index(spark: SparkSession, sf: str) -> str:
     """Build the persisted alias index ONCE per (session, sf) — the
     fit step a serving deployment pays at publish time, NOT per probe.
-    BENCH de-conflation (VERDICT r09 next #3): bench.py calls this
-    explicitly BEFORE timing the probe and reports the fit seconds as
-    its own line, so the x1_linker_indexed number is probe-only.
+    Calling it once before timing the probe keeps the fit out of the
+    x1_linker_indexed number.
     The index is fit with max_df_ratio=0.1 — the same stop-gram
     posture as x1_linker_corpus_maxdf, the inline baseline the probe
     is timed against (serving an UNPRUNED index would compare a
@@ -5700,9 +5699,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """queries() plus the pre-consolidation forms — NOT shipped to the
-    driver (window cap) but still first-class: bench.py times its round-1
-    headline list from here, and tests/test_oracle_parity.py hash-checks
-    every oracle-backed entry (the legacy oracles stay in oracle_sql)."""
+    driver (window cap) but still first-class: tests/test_oracle_parity.py
+    hash-checks every oracle-backed entry (the legacy oracles stay in
+    oracle_sql)."""
     return {
         **queries(),
         # round-6 rotation: the 25 demoted r05-green singles — each

@@ -10,16 +10,16 @@ path.
 
 ``shared_persist`` is a drop-in for ``.persist()`` that records the
 handle here; ``release_shared_caches()`` unpersists everything recorded
-— call it after the consuming action (bench.py does between queries).
-One-shot pipelines can ignore it: caches die with the session, and the
-storage level is evictable (memory+disk, recomputable on loss).
+— call it after the consuming action. One-shot pipelines can ignore
+it: caches die with the session, and the storage level is evictable
+(memory+disk, recomputable on loss).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-_SHARED: list[DataFrame] = []
+_SHARED: list[DataFrame | None] = []
 
 
 def shared_persist(df: DataFrame) -> DataFrame:
@@ -41,19 +41,25 @@ def cache_mark() -> int:
     return len(_SHARED)
 
 
+def _unpersist(df: DataFrame | None) -> int:
+    """Unpersist one registry entry; 1 if it was released, else 0 (a
+    slot ``release_between`` already cleared, or a stopped session —
+    nothing left to release)."""
+    if df is None:
+        return 0
+    try:
+        df.unpersist()
+        return 1
+    except Exception:
+        return 0
+
+
 def release_since(mark: int) -> int:
     """Unpersist (and unregister) every shared cache recorded after
     ``mark``; returns how many were released."""
     n = 0
     while len(_SHARED) > mark:
-        df = _SHARED.pop()
-        if df is None:
-            continue  # already released via release_between
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to release
+        n += _unpersist(_SHARED.pop())
     return n
 
 
@@ -67,14 +73,7 @@ def release_between(lo: int, hi: int) -> int:
     slots become ``None``; the stack releases skip them."""
     n = 0
     for i in range(lo, min(hi, len(_SHARED))):
-        df = _SHARED[i]
-        if df is None:
-            continue
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to release
+        n += _unpersist(_SHARED[i])
         _SHARED[i] = None
     return n
 
@@ -83,14 +82,4 @@ def release_shared_caches() -> int:
     """Unpersist every registered shared subtree; returns how many were
     released. Safe to call at any time — caches are recomputable, so a
     release mid-consumption only costs recompute, never correctness."""
-    n = 0
-    while _SHARED:
-        df = _SHARED.pop()
-        if df is None:
-            continue  # already released via release_between
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return n
+    return release_since(0)

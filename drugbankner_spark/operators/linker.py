@@ -45,8 +45,6 @@ size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -295,9 +293,9 @@ LINKER_PIN_FULL_MIN_POSTINGS = 1_000_000
 
 #: (applicationId, gram-plan semanticHash, n_postings) → estimated
 #: product rows. The estimate is a pure function of the mention batch
-#: plan and the posting table; repeat probes of the same shape (the
-#: bench's min-of-N, a serving loop on a fixed corpus slice) pay the
-#: estimate job once. A stale hit can only mis-size a pin width —
+#: plan and the posting table; repeat probes of the same shape
+#: (repeated timing runs, a serving loop on a fixed corpus slice) pay
+#: the estimate job once. A stale hit can only mis-size a pin width —
 #: performance, never results — so plan-hash + posting-count keying
 #: is enough (no file-snapshot component like the ACF memo needs).
 #: Bounded (ADVICE r14): a long-lived serving app issuing many
@@ -307,19 +305,6 @@ LINKER_PIN_FULL_MIN_POSTINGS = 1_000_000
 #: ``df`` dim it is near-free anyway).
 _PIN_EST_CACHE: dict = {}
 _PIN_EST_CACHE_MAX = 1024
-
-#: Env override for the probe-tail pin: "auto" (the estimate gate,
-#: default), "off", "full" (every exchange at
-#: spark.sql.shuffle.partitions — the r13 behavior), or an explicit
-#: integer width. The bench's pinned-vs-unpinned sf1 pair and the
-#: sf10 rehearsal's collapse guard both record through this knob.
-LINKER_PIN_ENV = "SPARK_GRAFT_LINKER_PIN"
-
-#: Instrumentation: the most recent auto-gate decisions, keyed by
-#: path ("score_full": n_postings/est_products/width; "rerank":
-#: est_products/width) — read by bench.py so the pin evidence lands
-#: in BENCH JSON without a second estimate job.
-LAST_PIN_DECISION: dict = {}
 
 #: Alias-count gate for the champion rerank's full-width pin (the
 #: rerank knows the meta's n_aliases but not the posting count). A
@@ -331,28 +316,6 @@ LAST_PIN_DECISION: dict = {}
 #: See :func:`_rerank_pin_width` for the estimate-gated variant this
 #: replaced after measurement.
 LINKER_PIN_MIN_ALIASES = 100_000
-
-
-def _pin_env_override(df: DataFrame) -> int | None:
-    """Resolve :data:`LINKER_PIN_ENV`: None for "auto"/unset (let the
-    gate decide), else the forced width (0 for "off"). A malformed
-    value names the variable instead of surfacing a bare int() error
-    mid-probe (round-14 review finding)."""
-    mode = os.environ.get(LINKER_PIN_ENV, "auto").strip().lower()
-    if mode in ("", "auto"):
-        return None
-    if mode == "off":
-        return 0
-    full = _pinned_shuffle_n(df)
-    if mode == "full":
-        return full
-    try:
-        return max(0, min(full, int(mode)))
-    except ValueError:
-        raise ValueError(
-            f"{LINKER_PIN_ENV}={mode!r} — expected 'auto', 'off', "
-            "'full', or an integer width"
-        ) from None
 
 
 def _pin_width(
@@ -393,36 +356,16 @@ def _pin_width(
     mention-side-counts ⋈ broadcast-dim → 1-row sum: near-free per
     new batch plan, and stable across driver restarts because the
     dim comes from the published index, not a recomputation
-    (the r14 bench priced the old posting-side agg at ~17% of the
-    sf1 inline fit — ``linker_pin_pair`` auto 8.22 s vs off 7.04 s).
-
-    Every exit records its decision in :data:`LAST_PIN_DECISION`
-    (ADVICE r14: the env-override and below-floor early returns used
-    to leave a stale decision from an earlier probe for bench's
-    snapshot to pick up)."""
-    override = _pin_env_override(mvec)
-    if override is not None:
-        LAST_PIN_DECISION["score_full"] = {
-            "n_postings": n_post, "est_products": None,
-            "width": override, "reason": "override",
-        }
-        return override
-    full = _pinned_shuffle_n(mvec)
+    (the old posting-side agg cost ~17% of the sf1 inline fit:
+    8.22 s with the estimate job vs 7.04 s with the pin forced off)."""
     if n_post < LINKER_PIN_MIN_POSTINGS:
-        LAST_PIN_DECISION["score_full"] = {
-            "n_postings": n_post, "est_products": None, "width": 0,
-            "reason": "below-floor",
-        }
         return 0
+    full = _pinned_shuffle_n(mvec)
     if n_post >= LINKER_PIN_FULL_MIN_POSTINGS:
         # the OR-condition alone forces the pin — don't pay the
         # estimate job for a decision it cannot change (round-14
         # review finding: the corpus-scale serving path was paying a
         # full posting-table agg per new batch plan for evidence only)
-        LAST_PIN_DECISION["score_full"] = {
-            "n_postings": n_post, "est_products": None, "width": full,
-            "reason": "posting-floor",
-        }
         return full
     mcnt = (
         gram_counts if gram_counts is not None
@@ -462,24 +405,12 @@ def _pin_width(
             if len(_PIN_EST_CACHE) >= _PIN_EST_CACHE_MAX:
                 _PIN_EST_CACHE.clear()
             _PIN_EST_CACHE[key] = est
-    width = 0 if est < LINKER_PIN_MIN_PRODUCT_ROWS else full
-    LAST_PIN_DECISION["score_full"] = {
-        "n_postings": n_post, "est_products": est, "width": width,
-        "reason": "estimate",
-        # True when the posting side was the fit's df dim (in-memory
-        # on inline fits, read from /idf on serving probes) rather
-        # than a fresh posting-table aggregation
-        "est_from_df_dim": gram_df is not None,
-    }
-    return width
+    return 0 if est < LINKER_PIN_MIN_PRODUCT_ROWS else full
 
 
 def _rerank_pin_width(cand: DataFrame, n_aliases: int | None) -> int:
     """Alias-count gate for the champion rerank's mention-keyed pin
-    (full width when fired; env override like :func:`_pin_width` —
-    and the override wins even on a legacy meta whose ``n_aliases``
-    is None, so a forced paired measurement is actually forced;
-    round-14 review finding).
+    (full width when fired).
 
     An estimate-gated variant (exact candidate-pair gram-count bound,
     one agg + 1-row collect) was implemented, MEASURED at both
@@ -491,22 +422,9 @@ def _rerank_pin_width(cand: DataFrame, n_aliases: int | None) -> int:
     alias gate at :data:`LINKER_PIN_MIN_ALIASES` already separates
     the measured-healthy from the measured-unhealthy points at both
     scales, with no estimate job on any probe."""
-    override = _pin_env_override(cand)
-    if override is not None:
-        LAST_PIN_DECISION["rerank"] = {
-            "n_aliases": n_aliases, "width": override,
-            "reason": "override",
-        }
-        return override
-    width = (
-        _pinned_shuffle_n(cand)
-        if n_aliases is not None and n_aliases >= LINKER_PIN_MIN_ALIASES
-        else 0
-    )
-    LAST_PIN_DECISION["rerank"] = {
-        "n_aliases": n_aliases, "width": width, "reason": "alias-gate",
-    }
-    return width
+    if n_aliases is not None and n_aliases >= LINKER_PIN_MIN_ALIASES:
+        return _pinned_shuffle_n(cand)
+    return 0
 
 
 def _mention_clustered(products: DataFrame, width: int) -> DataFrame:
@@ -746,9 +664,9 @@ ALIAS_CHAMPION_C = 512
 #: ontology size, both regimes measured. Mid scale (sf1, 35.6k
 #: aliases, G*=16 — where the sf10-only tuning left 11/202 mentions
 #: uncertified and every probe paying the full-join fallback): the
-#: sweep (tools/exp_wcut_sf1.py) measured factor 1.0 → certified
-#: 0.9455 / 5.6 s; 0.9 → **1.0 / 3.2 s**; 0.8 → 1.0 / 3.9 s; 0.7 →
-#: 1.0 / 5.0 s (candidate gen growing); legacy C=512 → 1.0 / 2.9 s —
+#: sweep measured factor 1.0 → certified 0.9455 / 5.6 s; 0.9 →
+#: **1.0 / 3.2 s**; 0.8 → 1.0 / 3.9 s; 0.7 → 1.0 / 5.0 s (candidate
+#: gen growing); legacy C=512 → 1.0 / 2.9 s —
 #: 0.9 is the largest cut that certifies everything. Large scale
 #: (sf10, 357k aliases): factor 1.0 already certifies 1.0 (the
 #: kth-score rule dominates — near-exact matches outscore any bound
@@ -758,13 +676,12 @@ ALIAS_CHAMPION_C = 512
 #: large-ontology probe ~30% to fix a regime it isn't in. A fixed
 #: factor stops tracking the ontology exactly the way the fixed
 #: rank cap C did (VERDICT r12 #1); the fit auto-picks by its own
-#: alias count. Boundary MEASURED from above
-#: (tools/exp_wcut_sf3.py — the sf3 corpus's 107k-alias dim: factor
-#: 1.0 certifies 1.0 AND serves faster, 4.48 s vs 5.14 s;
-#: tools/exp_wcut_70k.py, round 15 — a 69.5k-alias hash-cut of the
-#: same dim: factor 1.0 STILL certifies 1.0 with zero risky
-#: mentions, so the large regime is correct down to ~70k) and below
-#: (sf1, 35.6k: only ≤0.9 certifies 1.0). Boundary lowered 100k →
+#: alias count. Boundary MEASURED from above (the sf3 corpus's
+#: 107k-alias dim: factor 1.0 certifies 1.0 AND serves faster,
+#: 4.48 s vs 5.14 s; round 15 — a 69.5k-alias hash-cut of the same
+#: dim: factor 1.0 STILL certifies 1.0 with zero risky mentions, so
+#: the large regime is correct down to ~70k) and below (sf1, 35.6k:
+#: only ≤0.9 certifies 1.0). Boundary lowered 100k →
 #: 70k on that round-15 point (VERDICT r14 next #7); the remaining
 #: unmeasured gap (35.6k, 69.5k) runs 0.9, which errs toward
 #: certification — the exactness-preserving direction.

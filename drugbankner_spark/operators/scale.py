@@ -369,8 +369,8 @@ def recommended_join_strategy(
     broadcast_threshold_rows: int = 1_000_000,
 ) -> str:
     """Turn a :func:`key_skew_profile` into a join-strategy decision —
-    the logic the skew bench (bench.py ``skew`` section) demonstrates
-    end-to-end on the Zipfian-names J2 workload (SURVEY hard-part #4):
+    the decision the Zipfian-names J2 workload exercises end-to-end
+    (SURVEY hard-part #4):
 
     - ``'broadcast'`` when the dim side fits the broadcast budget: no
       shuffle at all, skew irrelevant (hot keys hit every executor's

@@ -13,6 +13,9 @@ multi-executor cluster — every config below is chosen to be correct for both:
   Arrow-batched, never row-at-a-time pickling.
 - UTC session timezone: deterministic timestamp semantics vs the DuckDB
   oracle and across clusters.
+- Driver heap: ``$SPARK_DRIVER_MEMORY`` when set, else a quarter of
+  physical RAM capped at 16 GiB. A heap at or above physical RAM lets
+  the JVM grow until the kernel's OOM killer ends it mid-job.
 """
 
 from __future__ import annotations
@@ -93,6 +96,11 @@ def rocksdb_state_conf(
     return conf
 
 
+def _default_driver_memory() -> str:
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(16 * 1024, phys_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "drugbankner-spark",
     shuffle_partitions: int | None = None,
@@ -132,7 +140,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     # Only force a local master when none is configured (cluster submits set it).

@@ -68,7 +68,12 @@ def _max_partition_bytes(spark: SparkSession) -> int:
         return 128 * 1024 * 1024
 
 
-def spread_input(df: DataFrame, cap_bytes: int | None = None) -> DataFrame:
+#: Inputs whose estimated size is above this are never spread by
+#: :func:`spread_input`: at that size the scan plans enough splits.
+SPREAD_CAP_BYTES = 1 << 30
+
+
+def spread_input(df: DataFrame) -> DataFrame:
     """Repair the parallelism of a small unsplittable input ahead of a
     per-row-HEAVY stage (guide §2.5 "input skew" / §6): the local
     fixtures are ONE parquet row group per table, so Spark plans
@@ -86,31 +91,18 @@ def spread_input(df: DataFrame, cap_bytes: int | None = None) -> DataFrame:
 
     Gate: the optimizer's size estimate for THIS subtree (column-pruned,
     no job) must be under what ONE scan task would read anyway
-    (``est_splits < defaultParallelism``) and under a 1 GiB safety cap.
-    At scale the gate never fires — a multi-GiB input plans enough
-    splits on its own — so this is input layout repair, not a
-    local-mode constant. Disable with SPARK_GRAFT_SPREAD=0; cap
-    override SPARK_GRAFT_SPREAD_CAP_MB.
+    (``est_splits < defaultParallelism``) and under
+    :data:`SPREAD_CAP_BYTES`. At scale the gate never fires — a
+    multi-GiB input plans enough splits on its own — so this is input
+    layout repair, not a local-mode constant.
 
     The exchange is ROUND-ROBIN on purpose: `count_shuffles` (the plan
     tests' shuffle budget) counts hash/range exchanges — the
     algorithmic shuffles an operator is responsible for — and a
     source-layout spread is not one of them."""
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") != "1":
-        return df
     spark = df.sparkSession
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        total_bytes = int(str(stats.sizeInBytes()))
-    except Exception:
-        return df
-    if total_bytes <= 0:
-        return df
-    if cap_bytes is None:
-        cap_bytes = int(
-            os.environ.get("SPARK_GRAFT_SPREAD_CAP_MB", "1024")
-        ) * 1024 * 1024
-    if total_bytes > cap_bytes:
+    total_bytes = est_plan_bytes(df)
+    if total_bytes is None or not 0 < total_bytes <= SPREAD_CAP_BYTES:
         return df
     target = spark.sparkContext.defaultParallelism
     est_splits = -(-total_bytes // _max_partition_bytes(spark))
@@ -128,17 +120,32 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     ~5 s inside a parquet write task — both measured this round). For
     the engine's driver-built dims (per-round rank offsets, bucket
     offset tables, collected query rows) that tax recurs once per
-    consuming job. Routing the same rows through a pandas frame ships
-    ONE Arrow batch to the JVM at plan time; execution is then pure
-    JVM. Non-empty rows only — empty inputs keep the plain path (their
-    execution is trivially cheap), as does anything pandas/Arrow
-    cannot represent (the fallback preserves exact semantics)."""
+    consuming job. Building the rows into a ``pyarrow.Table`` typed by
+    ``schema`` ships ONE Arrow batch to the JVM at plan time; execution
+    is then pure JVM. Each column is converted straight to its target
+    Arrow type, so a long column holding a None keeps every bit (a
+    pandas frame would widen it to float64 and round past 2**53).
+    Non-empty rows only — empty inputs keep the plain path (their
+    execution is trivially cheap), as does anything Arrow cannot
+    represent (the fallback preserves exact semantics)."""
     if rows:
         try:
-            import pandas as pd
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
+            from pyspark.sql.types import DataType, StructType
 
-            pdf = pd.DataFrame([tuple(r) for r in rows])
-            return spark.createDataFrame(pdf, schema=schema)
+            struct = (
+                schema if isinstance(schema, StructType)
+                else DataType.fromDDL(schema)
+            )
+            arrow_schema = to_arrow_schema(struct)
+            cols = list(zip(*(tuple(r) for r in rows)))
+            table = pa.Table.from_arrays(
+                [pa.array(c, type=f.type)
+                 for c, f in zip(cols, arrow_schema, strict=True)],
+                schema=arrow_schema,
+            )
+            return spark.createDataFrame(table, schema=struct)
         except Exception:
             pass
     return spark.createDataFrame(rows, schema)

@@ -11,6 +11,7 @@ __spark_entry__ (x1_tfidf_linker / ep1_tfidf_mechanistic_nodes).
 from __future__ import annotations
 
 import math
+import re
 
 from pyspark.sql import functions as F
 
@@ -573,8 +574,15 @@ def test_weight_policy_bulk_gate_and_pinned_exchanges(
         prune_buckets=False, use_champions=False,
     )._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" in flat_pinned
-    assert L.LAST_PIN_DECISION["score_full"]["width"] >= 2
-    assert L.LAST_PIN_DECISION["score_full"]["est_products"] > 0
+    # a fired pin is always FULL width (spark.sql.shuffle.partitions)
+    full = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    widths = {
+        int(w) for w in re.findall(
+            r"hashpartitioning\([^()]*, (\d+)\), REPARTITION_BY_NUM",
+            flat_pinned,
+        )
+    }
+    assert widths == {full} and full >= 2
     # the estimate itself gates: a sky-high product threshold keeps
     # the coalesced plan even above the posting floor
     monkeypatch.setattr(L, "LINKER_PIN_MIN_PRODUCT_ROWS", 10**15)
@@ -583,20 +591,6 @@ def test_weight_policy_bulk_gate_and_pinned_exchanges(
         prune_buckets=False, use_champions=False,
     )._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" not in flat_est_gated
-    # env override wins in both directions (the bench's paired-run knob)
-    monkeypatch.setenv(L.LINKER_PIN_ENV, "full")
-    forced = L.link_with_alias_index(
-        spark, wpath, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" in forced
-    monkeypatch.setattr(L, "LINKER_PIN_MIN_PRODUCT_ROWS", 1)
-    monkeypatch.setenv(L.LINKER_PIN_ENV, "off")
-    suppressed = L.link_with_alias_index(
-        spark, wpath, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" not in suppressed
 
 
 def test_pin_estimate_from_published_df_dim(spark, tmp_path,
@@ -605,8 +599,7 @@ def test_pin_estimate_from_published_df_dim(spark, tmp_path,
     # posting side from the (gram, df) dim the fit publishes with
     # /idf — same number as the legacy posting-table aggregation
     # (df == posting-list length by construction), no posting agg per
-    # batch plan, restart-stable. Also covers ADVICE r14: every
-    # _pin_width exit path records LAST_PIN_DECISION.
+    # batch plan, restart-stable.
     from drugbankner_spark.operators import linker as L
 
     aliases = spark.createDataFrame(
@@ -639,31 +632,49 @@ def test_pin_estimate_from_published_df_dim(spark, tmp_path,
     )
     assert mism == 0
 
-    # default floors on a tiny fixture: below-floor decision recorded
-    L.LAST_PIN_DECISION.clear()
-    L.link_with_alias_index(
-        spark, path, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    ).collect()
-    assert L.LAST_PIN_DECISION["score_full"]["reason"] == "below-floor"
-    assert L.LAST_PIN_DECISION["score_full"]["width"] == 0
+    def pinned(index_path: str) -> bool:
+        plan = L.link_with_alias_index(
+            spark, index_path, mentions, "mention", threshold=0.3, k=1,
+            prune_buckets=False, use_champions=False,
+        )._jdf.queryExecution().executedPlan().toString()
+        return "REPARTITION_BY_NUM" in plan
 
-    # estimate path: posting side comes from the published dim, and
-    # the estimate equals the legacy posting-agg number exactly
+    # default floors on a tiny fixture: below the posting floor the
+    # gate returns 0 without touching either side
+    assert L._pin_width(mentions, None, L.LINKER_PIN_MIN_POSTINGS - 1) == 0
+    assert not pinned(path)
+
+    # the exact product count Σ_gram (mention rows × posting rows),
+    # computed here from the mention grams and the on-disk postings
+    mcnt = (
+        L.char_wb_gram_counts(mentions.distinct(), "mention", "mention")
+        .groupBy("gram").agg(F.count(F.lit(1)).alias("_mcnt"))
+    )
+    pcnt = post_disk.groupBy("gram").agg(F.count(F.lit(1)).alias("_pcnt"))
+    sigma = (
+        mcnt.join(pcnt, "gram")
+        .agg(F.sum(F.col("_mcnt") * F.col("_pcnt")))
+        .first()[0]
+    )
+    assert sigma > 0
+    n_post = post_disk.count()
+    gram_df = idf_disk.select("gram", F.col("df").alias("_pcnt"))
+    full = int(spark.conf.get("spark.sql.shuffle.partitions"))
     monkeypatch.setattr(L, "LINKER_PIN_MIN_POSTINGS", 1)
-    L._PIN_EST_CACHE.clear()
-    L.LAST_PIN_DECISION.clear()
-    L.link_with_alias_index(
-        spark, path, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    ).collect()
-    dec_df = dict(L.LAST_PIN_DECISION["score_full"])
-    assert dec_df["reason"] == "estimate"
-    assert dec_df["est_from_df_dim"] is True
-    assert dec_df["est_products"] > 0
 
-    # legacy-index fallback (no df column): same estimate via the
-    # on-the-fly posting agg — the decision number must not change
+    # the published df dim prices the posting side alone (postings is
+    # never read), the legacy agg prices it from the posting table, and
+    # both land on exactly Σ: the gate fires at Σ and holds at Σ + 1
+    for postings, dim in ((None, gram_df), (post_disk, None)):
+        for gate, want in ((sigma, full), (sigma + 1, 0)):
+            L._PIN_EST_CACHE.clear()
+            monkeypatch.setattr(L, "LINKER_PIN_MIN_PRODUCT_ROWS", gate)
+            assert L._pin_width(mentions, postings, n_post, mcnt, dim) \
+                == want, (dim is not None, gate)
+
+    # legacy-index fallback (no df column): the probe prices the same
+    # estimate via the on-the-fly posting agg, so the gate flips at
+    # the same Σ on both indexes
     legacy = str(tmp_path / "legacy_df_idx")
     L.save_alias_index(aliases, "alias", "alias_id", legacy)
     import shutil
@@ -676,28 +687,22 @@ def test_pin_estimate_from_published_df_dim(spark, tmp_path,
     spark.createDataFrame(idf_legacy).write.partitionBy(
         "gram_bucket"
     ).parquet(legacy + "/idf")
-    L._PIN_EST_CACHE.clear()
-    L.LAST_PIN_DECISION.clear()
     L._ALIAS_META_CACHE.clear()
-    L.link_with_alias_index(
-        spark, legacy, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    ).collect()
-    dec_legacy = dict(L.LAST_PIN_DECISION["score_full"])
-    assert dec_legacy["est_from_df_dim"] is False
-    assert dec_legacy["est_products"] == dec_df["est_products"]
+    # record which posting side each probe hands the gate
+    from_df_dim = []
+    real_pin_width = L._pin_width
 
-    # override path records its decision too (ADVICE r14)
-    L.LAST_PIN_DECISION.clear()
-    monkeypatch.setenv(L.LINKER_PIN_ENV, "off")
-    L.link_with_alias_index(
-        spark, path, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    ).collect()
-    assert L.LAST_PIN_DECISION["score_full"] == {
-        "n_postings": L.LAST_PIN_DECISION["score_full"]["n_postings"],
-        "est_products": None, "width": 0, "reason": "override",
-    }
+    def spy(mvec, postings, n_post, gram_counts=None, gram_df=None):
+        from_df_dim.append(gram_df is not None)
+        return real_pin_width(mvec, postings, n_post, gram_counts, gram_df)
+
+    monkeypatch.setattr(L, "_pin_width", spy)
+    for index_path in (path, legacy):
+        for gate, want in ((sigma, True), (sigma + 1, False)):
+            L._PIN_EST_CACHE.clear()
+            monkeypatch.setattr(L, "LINKER_PIN_MIN_PRODUCT_ROWS", gate)
+            assert pinned(index_path) is want, (index_path, gate)
+    assert from_df_dim == [True, True, False, False]
 
 
 def test_champion_probe_opt_out_and_missing_layout(spark, tmp_path):

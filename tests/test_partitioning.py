@@ -385,3 +385,15 @@ def test_sql_string_builders_bit_identical_to_column_forms(spark):
         assert r["b_sql"] == r["b_col"]
         assert r["c_sql"] == r["c_col"]          # exact struct equality
         assert r["d_sql"] == r["d_col"]          # exact double equality
+
+
+def test_local_df_keeps_long_precision_next_to_nulls(spark):
+    # A long column holding a None must not detour through float64:
+    # 2**53 + 1 has no exact double and would come back as 2**53.
+    from drugbankner_spark.tables import local_df
+
+    big = 2**53 + 1
+    df = local_df(spark, [(big,), (None,)], "x long")
+    assert [r["x"] for r in df.collect()] == [big, None]
+    # the Arrow path plans a JVM-side local relation, not a Python RDD
+    assert "LocalTableScan" in X.plan_string(df)

@@ -681,17 +681,14 @@ def test_unpartitioned_window_inventory():
     # forms — suffixarray's offset dims (rows = partition ids),
     # privacy's histogram-bin cumsum, clustering's k seed winners
     # (after limit(k)), and the entry module's 25-row nation rank.
-    # bench.py suppresses the WindowExec warning on the strength of
-    # this inventory; a NEW `Window.orderBy(` site therefore needs a
-    # boundedness argument here or a partitionBy, never a silent
-    # merge.
+    # A NEW `Window.orderBy(` site therefore needs a boundedness
+    # argument here or a partitionBy, never a silent merge.
     # Round 14 (ADVICE r13): detection is AST-based — a call chain
     # whose root resolves to the Window class (direct import, aliased
     # import, or a local alias assignment) containing .orderBy( but no
     # .partitionBy( anywhere in the chain. The r13 cut matched the
     # single-line literal "Window.orderBy(", which an import alias or
-    # a wrapped call evaded — and bench.py suppresses WindowExec
-    # warnings on the strength of exactly this inventory.
+    # a wrapped call evaded.
     import ast
     import pathlib
 
@@ -699,7 +696,6 @@ def test_unpartitioned_window_inventory():
     sources = [
         *sorted((root / "drugbankner_spark").rglob("*.py")),
         root / "__spark_entry__.py",
-        root / "bench.py",
     ]
     hits = []
     for p in sources:
@@ -778,6 +774,68 @@ def test_unpartitioned_window_inventory():
         "unpartitioned-window inventory drifted — new site(s) need a "
         f"boundedness review: {hits}"
     )
+
+
+def test_env_reads_are_deployment_settings_only():
+    # Plan choices come from what the optimizer observes, never from
+    # env knobs a user flips: every environment read in the package
+    # names one deployment setting by a literal key. A computed key, a
+    # new knob or a whole-environment read fails here.
+    import ast
+    import pathlib
+
+    allowed = {
+        "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_DRIVER_MEMORY",
+        "SPARK_MASTER", "SPARK_SUBMIT_DEPLOY_MODE",
+    }
+
+    def literal(node):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        return None
+
+    def env_key(node, kind, parents):
+        """The literal key ``node`` (``os.environ`` / ``os.getenv``)
+        reads, or None for any other use."""
+        up = parents.get(node)
+        if kind == "getenv":
+            if isinstance(up, ast.Call) and up.func is node and up.args:
+                return literal(up.args[0])
+            return None
+        if isinstance(up, ast.Subscript) and up.value is node:
+            return literal(up.slice)
+        if isinstance(up, ast.Compare) and up.comparators == [node] \
+                and isinstance(up.ops[0], (ast.In, ast.NotIn)):
+            return literal(up.left)
+        if isinstance(up, ast.Attribute) and up.attr == "get":
+            call = parents.get(up)
+            if isinstance(call, ast.Call) and call.func is up and call.args:
+                return literal(call.args[0])
+        return None
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    bad = []
+    for p in sorted((root / "drugbankner_spark").rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        parents = {
+            child: node for node in ast.walk(tree)
+            for child in ast.iter_child_nodes(node)
+        }
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute)
+                    and node.attr in ("environ", "getenv")
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "os"):
+                kind = node.attr
+            elif (isinstance(node, ast.Name)
+                    and node.id in ("environ", "getenv")):
+                kind = node.id  # ``from os import environ``
+            else:
+                continue
+            key = env_key(node, kind, parents)
+            if key not in allowed:
+                bad.append(f"{p.relative_to(root)}:{node.lineno} {key!r}")
+    assert not bad, f"env reads outside the deployment settings: {bad}"
 
 
 def test_round13_candidate_rankers_sharded_plan_shapes(spark, tmp_path):
