@@ -8021,7 +8021,7 @@ def oracle_sql() -> dict[str, str]:
                        list_transform(
                            embedding,
                            v -> least(floor(greatest(-1.0, least(1.0,
-                                    CAST(v AS DOUBLE))) * 32767 + 0.5),
+                                    CAST(v AS DOUBLE))) * 32768 + 0.5),
                                 32767.0) / 32768.0
                        ) AS norm
                 FROM embeddings

@@ -117,13 +117,15 @@ def encode_wav(
         raise ValueError("encode_wav: sample count not divisible by channels")
     import math
 
-    # half-up quantization via floor(x + 0.5): unlike Python's banker's
-    # round(), this is reproducible in any SQL engine (floor(v*32767 +
-    # 0.5)), which the e4_wav_decode oracle relies on
+    # scale by 32768, the same factor decode_wav divides by, so a
+    # round trip is off by at most half a step (one step at +1.0, which
+    # clamps to 32767). Half-up quantization via floor(x + 0.5): unlike
+    # Python's banker's round(), this is reproducible in any SQL engine
+    # (floor(v*32768 + 0.5)), which the e4_wav_decode oracle relies on
     clamped = (max(-1.0, min(1.0, s)) for s in samples)
     body = struct.pack(
         f"<{len(samples)}h",
-        *(min(32767, int(math.floor(s * 32767 + 0.5))) for s in clamped),
+        *(min(32767, int(math.floor(s * 32768 + 0.5))) for s in clamped),
     )
     fmt = struct.pack(
         "<HHIIHH", _PCM_INT, channels, sample_rate,

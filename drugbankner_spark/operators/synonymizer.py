@@ -4,8 +4,8 @@ reference EP3: node_synonymizer.py).
 The reference canonicalizes biomedical entities against a SQLite
 concept-cluster graph: nodes belong to clusters; the cluster_id IS the
 canonical ("preferred") CURIE and is itself a member node's id; clusters
-carry a preferred name/category and member/edge id lists. Every lookup is
-an equi probe over precomputed normalized keys:
+carry a preferred name/category and member/edge id lists. Each lookup is
+an indexed probe over precomputed normalized keys:
 
 - by CURIE: uppercase the prefix, probe ``nodes.id_simplified``
   (node_synonymizer.py:67-86)
@@ -14,23 +14,48 @@ an equi probe over precomputed normalized keys:
   (node_synonymizer.py:88-119, 371-379)
 
 The engine holds the three tables as DataFrames (snapshotted from SQLite
-once — see sources.sqlite_snapshot) and expresses every method as a
-broadcast hash join: the dims are small relative to any fact side, so no
-fact-side shuffle occurs. Misses stay as NULLs (the reference's explicit
-None-for-miss contract, node_synonymizer.py:143-146).
+once — see sources.sqlite_snapshot). As the reference's indexed SQLite
+tables exist before its first lookup, each ``Synonymizer`` resolves its
+dims ONCE into two probe tables, ``(key, preferred_curie,
+preferred_name, preferred_category)``: the curie probe is nodes ⋈
+clusters keyed by ``id_simplified``; the name probe is the mode vote ⋈
+clusters keyed by ``name_simplified``; the ``biolink:`` prefix is applied
+at build time. Every lookup method joins the query to a probe on the
+normalized key expression — a broadcast hash join: the dims are small
+relative to any fact side, so no fact-side shuffle occurs. Misses stay as
+NULLs (the reference's explicit None-for-miss contract,
+node_synonymizer.py:143-146).
+
+Probe lifecycle: each probe is built and ``persist()``ed on its first use,
+with no eager action — the first query that reads it fills the cache, so
+a one-shot job (the ETL, the CLI) runs no extra job, and every later
+lookup on the instance reads the cached probe instead of re-running the
+vote's two shuffles. The probes belong to the instance:
+``Synonymizer.unpersist()`` releases them (a later lookup builds them
+again). They are deliberately NOT in ``caching``'s shared registry, whose
+scoped releases (``release_since``) operators run after their own actions.
+Staleness contract (as for ``known_prefix_list``): the dims are bound at
+construction; to serve a new snapshot, build a new instance and
+unpersist the old one. Two instances over the same dim plans share one
+cache entry, so unpersisting either releases it for both (the other
+recomputes on its next lookup).
 
 Determinism note: the reference's mode vote uses Python ``max`` over dict
 iteration order — nondeterministic on ties. We pin (count desc,
 cluster_id asc); documented divergence per SURVEY.md §2.4 A1.
 
 Scale note: at 100 TB the *query* side is huge, not the dims; every join
-here broadcasts the dim and AQE's skew-join handles Zipfian name keys.
-If the synonymizer itself outgrew broadcast range (~10^9 nodes), the same
-code runs as a shuffle hash join — switch by dropping the broadcast hint
-via ``Synonymizer(..., broadcast_dims=False)``.
+here broadcasts a probe and AQE's skew-join handles Zipfian name keys. A
+long-lived server keeps one instance, so the probes are resolved once
+for all its requests. If the synonymizer itself outgrew broadcast range
+(~10^9 nodes), ``Synonymizer(..., broadcast_dims=False)`` hints every
+probe join as a shuffle hash join instead; the probes are still cached
+(memory+disk, recomputable on loss).
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -77,6 +102,10 @@ ALL_PREFIXES: tuple[str, ...] = (
 )
 
 
+#: The resolved columns of a probe table, after its ``key``.
+_PREFERRED = ("preferred_curie", "preferred_name", "preferred_category")
+
+
 def add_biolink_prefix(col: F.Column) -> F.Column:
     """``biolink:`` prefixing; NULL/empty stay as-is
     (node_synonymizer.py:363-368)."""
@@ -103,28 +132,19 @@ class Synonymizer:
         self.nodes = nodes
         self.clusters = clusters
         self.edges = edges
-        self._hint = F.broadcast if broadcast_dims else (lambda df: df)
+        self._hint = (
+            F.broadcast if broadcast_dims
+            else (lambda df: df.hint("shuffle_hash"))
+        )
         self._prefix_cache: list[str] | None = None
+        self._probes: dict[str, DataFrame] = {}
+        # a server's first concurrent lookups must build each probe once
+        self._probe_lock = threading.Lock()
 
     # -- internals ---------------------------------------------------------
 
     def _dim(self, df: DataFrame) -> DataFrame:
         return self._hint(df)
-
-    def _curie_hits(self) -> DataFrame:
-        """nodes ⋈ clusters keyed by id_simplified (J1)."""
-        return (
-            self.nodes.select("id_simplified", "cluster_id")
-            .join(
-                self.clusters.select(
-                    "cluster_id",
-                    F.col("name").alias("_cluster_name"),
-                    F.col("category").alias("_cluster_category"),
-                    F.col("member_ids").alias("_member_ids"),
-                ),
-                "cluster_id",
-            )
-        )
 
     def _name_vote(self) -> DataFrame:
         """Per name_simplified: modal cluster (A1), count over node rows;
@@ -142,17 +162,73 @@ class Synonymizer:
             ).alias("cluster_id")
         )
 
-    def _name_hits(self) -> DataFrame:
-        """name_simplified → modal cluster ⋈ clusters (J2)."""
-        return self._name_vote().join(
+    def _probe(self, kind: str) -> DataFrame:
+        """The resolved probe table of one key kind, built and persisted
+        on first use and returned with the join hint applied. No eager
+        action: the first query that reads a probe fills its cache."""
+        with self._probe_lock:
+            if kind not in self._probes:
+                self._probes[kind] = self._dim(self._resolve(kind).persist())
+            return self._probes[kind]
+
+    def _resolve(self, kind: str) -> DataFrame:
+        """``(key, preferred_curie, preferred_name, preferred_category)``:
+        ``'curie'`` is nodes ⋈ clusters keyed by id_simplified (J1),
+        ``'name'`` the mode vote ⋈ clusters keyed by name_simplified
+        (J2)."""
+        if kind == "curie":
+            keys = self.nodes.select(
+                F.col("id_simplified").alias("key"), "cluster_id"
+            )
+        else:
+            keys = self._name_vote().withColumnRenamed("name_simplified", "key")
+        return keys.join(
             self.clusters.select(
                 "cluster_id",
-                F.col("name").alias("_cluster_name"),
-                F.col("category").alias("_cluster_category"),
-                F.col("member_ids").alias("_member_ids"),
+                F.col("name").alias("preferred_name"),
+                add_biolink_prefix(F.col("category")).alias(
+                    "preferred_category"
+                ),
             ),
             "cluster_id",
+        ).select(
+            "key",
+            F.col("cluster_id").alias("preferred_curie"),
+            "preferred_name",
+            "preferred_category",
         )
+
+    def _probe_join(
+        self, df: DataFrame, kind: str, key: F.Column, prefix: str
+    ) -> tuple[DataFrame, F.Column]:
+        """Left-join ``df`` to a probe on the key expression, adding the
+        probe's ``{prefix}preferred_*`` columns; returns the join and the
+        probe's key column, for the caller to drop or project away. The
+        rename is fresh per call, so a ``df`` that already holds this
+        probe still joins unambiguously."""
+        hits = self._probe(kind).toDF("_key", *[prefix + c for c in _PREFERRED])
+        return df.join(hits, key == hits["_key"], "left"), hits["_key"]
+
+    def _probe_both(self, df: DataFrame, entity_col: str) -> DataFrame:
+        """Curie probe then name probe of one entity column (J4): adds
+        ``c_preferred_*`` and ``n_preferred_*``, plus two probe keys the
+        caller projects away."""
+        c, _ = self._probe_join(
+            df, "curie", capitalize_curie_prefix(df[entity_col]), "c_"
+        )
+        cn, _ = self._probe_join(
+            c, "name", simplify_name(df[entity_col]), "n_"
+        )
+        return cn
+
+    def unpersist(self) -> None:
+        """Release this instance's cached probes; a later lookup builds
+        them again. The probes are not in ``caching``'s shared registry,
+        so ``release_since``/``release_shared_caches`` leave them alone."""
+        with self._probe_lock:
+            for probe in self._probes.values():
+                probe.unpersist()
+            self._probes.clear()
 
     # -- public API (each mirrors a reference method) ----------------------
 
@@ -163,36 +239,20 @@ class Synonymizer:
         capitalize the CURIE prefix, probe id_simplified, return preferred
         (curie, name, biolink-category); misses → NULLs.
         """
-        key = capitalize_curie_prefix(F.col(curie_col))
-        hits = self._dim(
-            self._curie_hits().select(
-                F.col("id_simplified").alias("_key"),
-                F.col("cluster_id").alias(f"{prefix}preferred_curie"),
-                F.col("_cluster_name").alias(f"{prefix}preferred_name"),
-                add_biolink_prefix(F.col("_cluster_category")).alias(
-                    f"{prefix}preferred_category"
-                ),
-            )
+        joined, key = self._probe_join(
+            df, "curie", capitalize_curie_prefix(df[curie_col]), prefix
         )
-        return df.withColumn("_key", key).join(hits, "_key", "left").drop("_key")
+        return joined.drop(key)
 
     def canonical_from_names(
         self, df: DataFrame, name_col: str, prefix: str = ""
     ) -> DataFrame:
         """get_canonical_curies(names=...) (node_synonymizer.py:88-119):
         simplify the name, probe name_simplified, mode-vote the cluster."""
-        key = simplify_name(F.col(name_col))
-        hits = self._dim(
-            self._name_hits().select(
-                F.col("name_simplified").alias("_nkey"),
-                F.col("cluster_id").alias(f"{prefix}preferred_curie"),
-                F.col("_cluster_name").alias(f"{prefix}preferred_name"),
-                add_biolink_prefix(F.col("_cluster_category")).alias(
-                    f"{prefix}preferred_category"
-                ),
-            )
+        joined, key = self._probe_join(
+            df, "name", simplify_name(df[name_col]), prefix
         )
-        return df.withColumn("_nkey", key).join(hits, "_nkey", "left").drop("_nkey")
+        return joined.drop(key)
 
     def fuzzy_canonical_from_names(
         self, df: DataFrame, name_col: str, max_distance: int = 2
@@ -210,16 +270,7 @@ class Synonymizer:
         from drugbankner_spark.operators.relational import fuzzy_join
 
         probes = df.withColumn("_nkey", simplify_name(F.col(name_col)))
-        dim = self._dim(
-            self._name_hits().select(
-                F.col("name_simplified"),
-                F.col("cluster_id").alias("preferred_curie"),
-                F.col("_cluster_name").alias("preferred_name"),
-                add_biolink_prefix(F.col("_cluster_category")).alias(
-                    "preferred_category"
-                ),
-            )
-        )
+        dim = self._probe("name").withColumnRenamed("key", "name_simplified")
         return (
             fuzzy_join(
                 probes, dim.select("name_simplified"),
@@ -238,24 +289,17 @@ class Synonymizer:
         """Curie-first, name-fallback (J4; CLI path
         node_synonymizer.py:468-472): coalesce the two probes, plus a
         ``matched_via`` provenance column ('curie' | 'name' | NULL)."""
-        c = self.canonical_from_curies(df, entity_col, prefix="c_")
-        cn = self.canonical_from_names(c, entity_col, prefix="n_")
-        out = cn.select(
+        # SQL text: one py4j call per column instead of one per node of
+        # a Column tree, which is most of this projection's build time
+        return self._probe_both(df, entity_col).select(
             *df.columns,
-            F.coalesce("c_preferred_curie", "n_preferred_curie").alias(
-                "preferred_curie"
+            *[F.expr(f"coalesce(c_{c}, n_{c}) AS {c}") for c in _PREFERRED],
+            F.expr(
+                "CASE WHEN c_preferred_curie IS NOT NULL THEN 'curie' "
+                "WHEN n_preferred_curie IS NOT NULL THEN 'name' END "
+                "AS matched_via"
             ),
-            F.coalesce("c_preferred_name", "n_preferred_name").alias(
-                "preferred_name"
-            ),
-            F.coalesce("c_preferred_category", "n_preferred_category").alias(
-                "preferred_category"
-            ),
-            F.when(F.col("c_preferred_curie").isNotNull(), F.lit("curie"))
-            .when(F.col("n_preferred_curie").isNotNull(), F.lit("name"))
-            .alias("matched_via"),
         )
-        return out
 
     def canonical_from_suffix(
         self, df: DataFrame, suffix_col: str, prefixes: list[str] | None = None
@@ -317,20 +361,17 @@ class Synonymizer:
         """get_equivalent_nodes (node_synonymizer.py:150-214, J3): same
         curie-first/name-fallback probes but projecting the cluster's
         member_ids array; misses → NULL array."""
-        c = self.canonical_from_curies(df, entity_col, prefix="c_")
-        cn = self.canonical_from_names(c, entity_col, prefix="n_")
         members = self._dim(
             self.clusters.select(
                 F.col("cluster_id").alias("_mcid"), "member_ids"
             )
         )
-        out = (
-            cn.withColumn(
-                "_cid", F.coalesce("c_preferred_curie", "n_preferred_curie")
-            )
-            .join(members, F.col("_cid") == F.col("_mcid"), "left")
-            .select(*df.columns, F.col("member_ids").alias("equivalent_ids"))
-        )
+        out = self._probe_both(df, entity_col).join(
+            members,
+            F.coalesce("c_preferred_curie", "n_preferred_curie")
+            == F.col("_mcid"),
+            "left",
+        ).select(*df.columns, F.col("member_ids").alias("equivalent_ids"))
         if explode:
             out = out.select(
                 *df.columns, F.explode("equivalent_ids").alias("equivalent_id")

@@ -6,13 +6,18 @@ from __future__ import annotations
 
 import os
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark import StorageLevel  # noqa: E402
+
+from drugbankner_spark import caching  # noqa: E402
 from drugbankner_spark.fixtures import mini_synonymizer_frames  # noqa: E402
 from drugbankner_spark.operators.synonymizer import Synonymizer  # noqa: E402
+from drugbankner_spark.plans import explain as X  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -55,9 +60,17 @@ def test_canonical_from_names_mode_vote(spark, syn):
     assert out["nope"]["preferred_curie"] is None
 
 
+FALLBACK_INPUTS = ["CHEBI:101", "Ecotrin", "head ache", "zzz"]
+
+
 def test_canonical_lookup_fallback(spark, syn):
-    df = _inputs(spark, ["CHEBI:101", "Ecotrin", "head ache", "zzz"])
-    out = _by_entity(syn.canonical_lookup(df, "entity").collect())
+    _assert_fallback_golden(
+        syn.canonical_lookup(_inputs(spark, FALLBACK_INPUTS), "entity")
+    )
+
+
+def _assert_fallback_golden(lookup):
+    out = _by_entity(lookup.collect())
     assert out["CHEBI:101"]["matched_via"] == "curie"
     assert out["Ecotrin"]["matched_via"] == "name"
     assert out["Ecotrin"]["preferred_curie"] == "CHEBI:101"
@@ -161,3 +174,102 @@ def test_fuzzy_canonical_from_names_typos(spark, syn):
     assert best["Aspirin"]["preferred_curie"] == "CHEBI:100"
     assert best["Aspirin"]["distance"] == 0
     assert "xyzzyqq" not in by_entity
+
+
+def _fresh_syn(spark, **kw):
+    return Synonymizer(*mini_synonymizer_frames(spark), **kw)
+
+
+def test_warm_lookup_runs_at_most_three_jobs(spark):
+    # The probes are resolved once per instance: after one lookup has
+    # filled their caches, a lookup is the two probe broadcasts plus the
+    # query's own job. Re-deriving the mode vote and the clusters join
+    # per call ran 8-9 jobs.
+    syn = _fresh_syn(spark)
+    _assert_fallback_golden(
+        syn.canonical_lookup(_inputs(spark, FALLBACK_INPUTS), "entity")
+    )
+    sc = spark.sparkContext
+    group = "test_warm_lookup_runs_at_most_three_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        syn.canonical_lookup(_inputs(spark, FALLBACK_INPUTS), "entity").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, jobs
+    syn.unpersist()
+
+
+def test_unpersist_releases_probes_and_lookups_still_answer(spark):
+    syn = _fresh_syn(spark)
+    df = _inputs(spark, FALLBACK_INPUTS)
+    _assert_fallback_golden(syn.canonical_lookup(df, "entity"))
+    probes = list(syn._probes.values())
+    assert len(probes) == 2
+    assert all(p.storageLevel != StorageLevel.NONE for p in probes)
+    # not in the shared registry: the scoped releases operators run after
+    # their own actions must not drop a live instance's probes
+    caching.release_shared_caches()
+    assert all(p.storageLevel != StorageLevel.NONE for p in probes)
+
+    syn.unpersist()
+    assert all(p.storageLevel == StorageLevel.NONE for p in probes)
+    _assert_fallback_golden(syn.canonical_lookup(df, "entity"))
+    syn.unpersist()
+
+
+def _rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def test_shuffled_dims_answer_like_broadcast_dims(spark, syn):
+    shuffled = _fresh_syn(spark, broadcast_dims=False)
+    df = _inputs(spark, FALLBACK_INPUTS + ["chebi:100", "Aspirin", "TIEBREAK"])
+    for method in ("canonical_lookup", "canonical_from_names",
+                   "equivalent_nodes"):
+        assert _rows(getattr(shuffled, method)(df, "entity")) == \
+            _rows(getattr(syn, method)(df, "entity")), method
+
+    # after the probes are cached their size is known and tiny; the
+    # hint still keeps both probe joins shuffled
+    lookup = shuffled.canonical_lookup(df, "entity")
+    lookup.collect()
+    plan = _without_cached_plans(X.plan_string(lookup, "simple"))
+    assert "BroadcastHashJoin" not in plan, plan
+    assert plan.count("ShuffledHashJoin") == 4, plan  # final + initial plan
+    shuffled.unpersist()
+
+
+def _without_cached_plans(plan: str) -> str:
+    """The plan text minus the subtrees printed under each
+    ``InMemoryRelation`` (the plans that built a cache, not this query's
+    operators): drop every line indented deeper than that node."""
+    out, cut = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :|"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in line else None
+        out.append(line)
+    return "\n".join(out)
+
+
+def test_concurrent_first_lookups_build_each_probe_once(spark):
+    # a server's first lookups can arrive together: each probe must be
+    # built (and persisted) by exactly one of them
+    syn = _fresh_syn(spark)
+    kinds = ["curie", "name"] * 8
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(len(kinds)) as pool:
+            futures = [pool.submit(syn._probe, k) for k in kinds]
+            got = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    for kind in ("curie", "name"):
+        assert len({id(p) for k, p in zip(kinds, got) if k == kind}) == 1
+    assert syn._probes == {"curie": got[0], "name": got[1]}
+    syn.unpersist()
